@@ -1,9 +1,10 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry(spark)`` — flagship rule-based anomaly-flags query at sf0.001.
-``queries()`` / ``oracle_sql()`` — the named-operator registry, defined
-in ``anomaly_detection_spark.queries`` (one entry per implemented
-operator from SURVEY.md §2 + the LLM-pipeline extensions).
+``queries()`` / ``oracle_sql()`` — the named-operator registry in
+registration order, defined in ``anomaly_detection_spark.queries`` (one
+entry per implemented operator from SURVEY.md §2 + the LLM-pipeline
+extensions).
 """
 
 from __future__ import annotations

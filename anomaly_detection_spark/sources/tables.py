@@ -114,12 +114,26 @@ def spread_single_file(df: DataFrame) -> DataFrame:
     if 0 < n_files < parallelism:
         # ``inputFiles`` sees through shuffles, so a frame a caller
         # already widened still reports its one backing file — skip if
-        # the lineage already holds a Repartition (a ~5 ms logical-plan
-        # string probe; re-spreading would add a full extra exchange)
+        # the lineage already holds a Repartition (re-spreading would
+        # add a full extra exchange)
         try:
-            if "Repartition" in str(df._jdf.queryExecution().logical()):
+            if _has_repartition(df._jdf.queryExecution().logical()):
                 return df
         except Exception:
             pass
         return df.repartition(parallelism)
     return df
+
+
+def _has_repartition(plan) -> bool:
+    """Whether a JVM logical plan holds a ``Repartition`` or
+    ``RepartitionByExpression`` node.  Walks the nodes, so a string
+    literal or column name spelling the word does not count."""
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() in ("Repartition", "RepartitionByExpression"):
+            return True
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return False

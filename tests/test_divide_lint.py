@@ -134,7 +134,7 @@ ALLOWLIST = {'ab_test_lift_events': 11,
  'markov_stationary_types': 14,
  'markov_transitions_events': 1,
  'mcnemar_rule_classifier': 4,
- 'minhash_near_dups': 2,
+ 'minhash_near_dups': 1,
  'mixture_sample_docs': 2,
  'morans_i_embedding_grid': 1,
  'mutual_information_type_value': 4,

@@ -47,6 +47,13 @@ def test_registry_is_fully_oracle_paired():
     strictly higher anyway)."""
     unpaired = sorted(set(reg.QUERIES) - set(reg.ORACLES))
     assert not unpaired, f"queries without oracles: {unpaired}"
+    orphans = sorted(set(reg.ORACLES) - set(reg.QUERIES))
+    assert not orphans, f"oracles without queries: {orphans}"
+
+
+def test_driver_surface_is_registration_order():
+    assert list(reg.queries()) == list(reg.QUERIES)
+    assert list(reg.oracle_sql()) == list(reg.ORACLES)
 
 
 @pytest.mark.parametrize("name", ORACLE_NAMES)

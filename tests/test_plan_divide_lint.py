@@ -11,8 +11,7 @@ direction forces a conscious review: an increase means a new
 unguarded division landed; a decrease means guards changed and the
 allowlist must be re-recorded (the oracle lint's pinned-count model).
 
-The full scan builds ~370 plans (~5 min), so it is env-gated like the
-backlog gate:
+The full scan builds ~370 plans (~5 min), so it is env-gated:
 
     SPARK_GRAFT_PLANLINT=1 python -m pytest tests/test_plan_divide_lint.py -q
 

@@ -370,3 +370,17 @@ def test_spread_single_file_is_idempotent_on_widened_lineage(spark, sf_dir):
     assert plan.count("Repartition") == 1, plan
     # and the guard still fires on a raw narrow scan
     assert str(once._jdf.queryExecution().logical()).count("Repartition") == 1
+
+
+def test_spread_single_file_ignores_the_word_in_a_literal(spark, sf_dir):
+    from anomaly_detection_spark.sources.tables import (
+        _has_repartition, load_table, spread_single_file,
+    )
+
+    docs = load_table(spark, "documents", sf_dir).where(
+        F.col("text") != "Repartition"
+    )
+    assert "Repartition" in str(docs._jdf.queryExecution().logical())
+    assert not _has_repartition(docs._jdf.queryExecution().logical())
+    spread = spread_single_file(docs)
+    assert _has_repartition(spread._jdf.queryExecution().logical())

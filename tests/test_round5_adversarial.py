@@ -13,6 +13,7 @@ import tempfile
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 
 from anomaly_detection_spark import queries as reg
 from tests.oracle_check import compare
@@ -304,8 +305,14 @@ ADVERSARIAL_EVENT_QUERIES = [
 # for breadth.  The exhaustive sweeps stay the gate for NEW queries
 # and engine-expression changes: run them whenever a statistical
 # query's expressions change (same opt-in pattern as
-# SPARK_GRAFT_BACKLOG / SPARK_GRAFT_PLANLINT).
+# SPARK_GRAFT_PLANLINT).
 _FULL_SWEEPS = bool(os.environ.get("SPARK_GRAFT_ADVERSARIAL"))
+# the smoke subsets are slices of the full sweeps: run one or the other
+_smoke_only = pytest.mark.skipif(
+    _FULL_SWEEPS, reason="covered by the full-family sweep")
+_full_only = pytest.mark.skipif(
+    not _FULL_SWEEPS,
+    reason="full-family sweep is opt-in: SPARK_GRAFT_ADVERSARIAL=1")
 
 _EVENT_SMOKE_FINDS = [
     # r9 real finds on this fixture (each regressed once — pin forever)
@@ -316,10 +323,11 @@ _EVENT_SMOKE_FINDS = [
 
 
 def _smoke(full, finds):
-    keep = list(dict.fromkeys(finds + full[::6]))
-    return [n for n in keep if n in full or n in finds]
+    assert set(finds) <= set(full), sorted(set(finds) - set(full))
+    return list(dict.fromkeys(finds + full[::6]))
 
 
+@_smoke_only
 def test_adversarial_events_differentials_smoke(spark):
     d = _adversarial_events_dir(spark)
     fails = {}
@@ -335,10 +343,8 @@ def test_adversarial_events_differentials_smoke(spark):
     assert not fails, fails
 
 
+@_full_only
 def test_adversarial_events_differentials(spark):
-    if not _FULL_SWEEPS:
-        import pytest
-        pytest.skip("full-family sweep is opt-in: SPARK_GRAFT_ADVERSARIAL=1")
     d = _adversarial_events_dir(spark)
     fails = {}
     for name in ADVERSARIAL_EVENT_QUERIES:
@@ -487,6 +493,7 @@ _DOCUMENT_SMOKE_FINDS = [
 ]
 
 
+@_smoke_only
 def test_adversarial_documents_differentials_smoke(spark):
     d = _adversarial_documents_dir(spark)
     fails = {}
@@ -502,10 +509,8 @@ def test_adversarial_documents_differentials_smoke(spark):
     assert not fails, fails
 
 
+@_full_only
 def test_adversarial_documents_differentials(spark):
-    if not _FULL_SWEEPS:
-        import pytest
-        pytest.skip("full-family sweep is opt-in: SPARK_GRAFT_ADVERSARIAL=1")
     d = _adversarial_documents_dir(spark)
     fails = {}
     for name in ADVERSARIAL_DOCUMENT_QUERIES:

@@ -1,5 +1,5 @@
-"""Round-5 operator tests: vectorized DTW kernel, detector invariant
-oracles, and the driver-sim backlog gate helpers."""
+"""Round-5 operator tests: vectorized DTW kernel and detector invariant
+oracles."""
 
 from __future__ import annotations
 

@@ -141,39 +141,6 @@ def test_rank_family_callers_leak_no_cache_and_stay_green(spark, sf_dir):
         )
 
 
-def test_driver_window_fronts_never_green_queries():
-    """r8 re-tier: with the registry above the 50-slot driver window,
-    never-verified queries must outrank changed-but-locally-reverified
-    ones (a first green row is new information; a re-green refreshes a
-    row the local compare already re-validated)."""
-    order = reg._ordered(reg.QUERIES)
-    green = reg._driver_green()
-    seen_green = False
-    for name in order:
-        if name in green:
-            seen_green = True
-        else:
-            assert not seen_green, (
-                f"never-green query {name!r} sorts behind a green one"
-            )
-    # reverify entries that a fresh round has NOT re-greened come
-    # before green queries whose rows vouch for current code
-    fresh = {
-        n for n, since in reg.DRIVER_REVERIFY.items()
-        if n in reg._driver_green(min_round=since)
-    }
-    stale = [n for n in order if n in reg.DRIVER_REVERIFY
-             and n not in fresh and n in green]
-    if stale:
-        vouched = [i for i, n in enumerate(order)
-                   if n in green and (n not in reg.DRIVER_REVERIFY
-                                      or n in fresh)]
-        last_stale = max(order.index(n) for n in stale)
-        assert not vouched or last_stale < min(vouched), (
-            "stale-reverify query sorts behind a fully-vouched one"
-        )
-
-
 def _write_parquet(spark, d, name, rows, schema):
     import os
 

@@ -241,32 +241,3 @@ def test_kendall_w_agreement_laws(spark):
     assert r["n_items"] == 1 and r["w_den"] == 0 and r["w_ppm"] is None
     assert not compare(reg.QUERIES["kendall_w_event_types"](spark, d),
                        reg.ORACLES["kendall_w_event_types"], d)
-
-
-def test_driver_window_green_tier_sorts_oldest_rows_first():
-    """r9 re-tier: spare window slots go to the stalest vouched-for rows
-    (ascending last-green round), so each round's slack raises the whole
-    registry's freshness floor instead of recycling recent rows."""
-    order = reg._ordered(reg.QUERIES)
-    green = reg._driver_green()
-    fresh = {
-        n for n, since in reg.DRIVER_REVERIFY.items()
-        if n in reg._driver_green(min_round=since)
-    }
-    last = reg._last_green_round()
-    vouched_oracle = [
-        n for n in order
-        if n in green and (n not in reg.DRIVER_REVERIFY or n in fresh)
-        and n in reg.ORACLES
-    ]
-    rounds = [last[n] for n in vouched_oracle]
-    assert rounds == sorted(rounds), (
-        "vouched-for oracle tier is not ordered oldest-green-first"
-    )
-    # sanity: the tier machinery still fronts reverify entries
-    stale = [n for n in order if n in reg.DRIVER_REVERIFY
-             and n not in fresh and n in green]
-    if stale and vouched_oracle:
-        assert max(order.index(n) for n in stale) < order.index(
-            vouched_oracle[0]
-        )

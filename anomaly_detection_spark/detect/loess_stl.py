@@ -1,8 +1,8 @@
 """Pure-numpy LOESS STL (periodic seasonal) — Cleveland et al. 1990.
 
 The reference engine decomposes with R's ``stl(s.window="periodic",
-robust=TRUE)`` (``func.R:96``); this container ships no statsmodels, so
-this module vendors the algorithm itself rather than approximating it
+robust=TRUE)`` (``func.R:96``); this module vendors the algorithm
+itself (no third-party STL dependency) rather than approximating it
 with classical moving-average decomposition:
 
 - ``s.window="periodic"`` collapses the seasonal loess to robust

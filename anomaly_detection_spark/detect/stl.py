@@ -11,12 +11,11 @@ single biggest scalability win of the port (SURVEY.md §2.9 M7). At
 100 TB key cardinality grows but group size stays bounded, so executor
 memory is flat and the job scales linearly.
 
-Decomposition: ``statsmodels.tsa.seasonal.STL(period, robust=True)``
-when available; otherwise a pure-numpy classical additive
-decomposition (centered moving-average trend + per-phase median
-seasonal) with the same observed/season/trend/remainder contract —
-the container has no statsmodels, and the IQR anomaly test only needs
-a detrended/deseasonalized remainder.
+Decomposition: the vendored pure-numpy LOESS STL
+(``detect/loess_stl.py``, periodic seasonal, robust outer loop) — the
+stand-in for R's ``stl(s.window="periodic", robust=TRUE)``; series
+shorter than two periods fall back to a moving-average trend. The IQR
+anomaly test only needs the detrended/deseasonalized remainder.
 
 Anomaly test: the anomalize package's IQR method (its default):
 limits ``q25 − k·IQR`` / ``q75 + k·IQR`` with ``k = 0.15/alpha``
@@ -45,11 +44,6 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
-
-try:  # statsmodels is not in the v1 container; prefer it when present
-    from statsmodels.tsa.seasonal import STL as _STL  # type: ignore
-except ImportError:  # pragma: no cover
-    _STL = None
 
 ALPHA_DEFAULT = 0.05
 MAX_ANOMS_DEFAULT = 0.2
@@ -84,9 +78,9 @@ def decompose(values: np.ndarray, period: int = 7,
               robust: bool = True) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """observed → (season, trend, remainder), additive.
 
-    STL when statsmodels is importable and the series is long enough
-    (≥ 2 full periods, the same constraint the reference hits —
-    SURVEY.md §7.6.3); classical numpy decomposition otherwise.
+    LOESS STL when the series is long enough (≥ 2 full periods, the
+    same constraint the reference hits — SURVEY.md §7.6.3); a
+    moving-average trend with zero season otherwise.
     """
     values = np.asarray(values, dtype=np.float64)
     n = len(values)
@@ -95,9 +89,6 @@ def decompose(values: np.ndarray, period: int = 7,
         trend = _moving_average_trend(values, min(period, max(1, n // 2)))
         season = np.zeros(n)
         return season, trend, values - trend
-    if _STL is not None:
-        res = _STL(values, period=period, robust=robust).fit()
-        return np.asarray(res.seasonal), np.asarray(res.trend), np.asarray(res.resid)
     # vendored pure-numpy LOESS STL (periodic seasonal, robust outer
     # loop) — the faithful stand-in for R's stl(s.window="periodic",
     # robust=TRUE); fidelity pinned by tests/test_stl_fidelity.py
@@ -133,6 +124,43 @@ def _score(remainder: np.ndarray, l1: float, l2: float) -> np.ndarray:
     return np.abs(remainder - buffer_zero) / buffer_radius
 
 
+SUMMARY_COLUMNS = [
+    "data_timestamp", "value", "seven_day_avg", "score", "anomaly",
+    "repetitions", "frequency",
+]
+
+
+def summarize_series(
+    vals: np.ndarray,
+    ts: Sequence,
+    period: int = 7,
+    alpha: float = ALPHA_DEFAULT,
+    max_anoms: float = MAX_ANOMS_DEFAULT,
+    reference_quirks: bool = False,
+) -> tuple:
+    """The detector's summary row (``SUMMARY_COLUMNS``) for one series
+    sorted by time: the last observation's timestamp, value, trailing
+    mean, score and verdict, its repeats among the prior values, and
+    the last sampling gap in days."""
+    rep_window = 9 if reference_quirks else 7
+    avg_tail = 8 if reference_quirks else 7
+    n = len(vals)
+    _season, _trend, remainder = decompose(vals, period=period)
+    is_anom, l1, l2 = iqr_anomalize(remainder, alpha=alpha, max_anoms=max_anoms)
+    last = vals[-1]
+    prior = vals[max(0, n - 1 - rep_window):n - 1]
+    gap = (
+        (ts[-1] - ts[-2]).total_seconds() / SECONDS_PER_DAY
+        if n >= 2 else float("nan")
+    )
+    return (
+        ts[-1], float(last), float(vals[-avg_tail:].mean()),
+        float(_score(remainder, l1, l2)[-1]),
+        "Yes" if bool(is_anom[-1]) else "No",
+        int((prior == last).sum()), gap,
+    )
+
+
 def stl_iqr_detect(
     fact: DataFrame,
     keys: Sequence[str],
@@ -152,8 +180,6 @@ def stl_iqr_detect(
     """
     keys = list(keys)
     min_pts = min_points if min_points is not None else 2
-    rep_window = 9 if reference_quirks else 7
-    avg_tail = 8 if reference_quirks else 7
 
     key_fields = ", ".join(
         f"{k} {fact.schema[k].dataType.simpleString()}" for k in keys
@@ -167,32 +193,13 @@ def stl_iqr_detect(
     def detect(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(ts_col)
         vals = pdf[value_col].to_numpy(dtype=np.float64)
-        ts = pdf[ts_col]
-        n = len(vals)
-        if n < min_pts:
-            return pd.DataFrame(columns=list(pdf[keys].columns) + [
-                "data_timestamp", "value", "seven_day_avg", "score",
-                "anomaly", "repetitions", "frequency"])
-        season, trend, remainder = decompose(vals, period=period)
-        is_anom, l1, l2 = iqr_anomalize(remainder, alpha=alpha, max_anoms=max_anoms)
-        scores = _score(remainder, l1, l2)
-        last_value = vals[-1]
-        tail = vals[-avg_tail:]
-        prior = vals[max(0, n - 1 - rep_window):n - 1]
-        gap = (
-            (ts.iloc[-1] - ts.iloc[-2]).total_seconds() / SECONDS_PER_DAY
-            if n >= 2 else float("nan")
-        )
+        if len(vals) < min_pts:
+            return pd.DataFrame(columns=keys + SUMMARY_COLUMNS)
         row = {k: pdf[k].iloc[0] for k in keys}
-        row.update({
-            "data_timestamp": ts.iloc[-1],
-            "value": float(last_value),
-            "seven_day_avg": float(tail.mean()),
-            "score": float(scores[-1]),
-            "anomaly": "Yes" if bool(is_anom[-1]) else "No",
-            "repetitions": int((prior == last_value).sum()),
-            "frequency": gap,
-        })
+        row.update(zip(SUMMARY_COLUMNS, summarize_series(
+            vals, pdf[ts_col].tolist(), period, alpha, max_anoms,
+            reference_quirks,
+        )))
         return pd.DataFrame([row])
 
     # project before the grouped map (applyInPandas ships every column
@@ -204,61 +211,3 @@ def stl_iqr_detect(
     )
     return slim.groupBy(*keys).applyInPandas(detect, schema=out_schema)
 
-
-def stl_iqr_score(
-    fact: DataFrame,
-    keys: Sequence[str],
-    ts_col: str,
-    value_col: str,
-    period: int = 7,
-    alpha: float = ALPHA_DEFAULT,
-    max_anoms: float = MAX_ANOMS_DEFAULT,
-) -> DataFrame:
-    """Every observation scored (decomposition + band + score per row).
-
-    The per-row analogue of ``stl_iqr_detect`` — what the reference's
-    ``time_decompose %>% anomalize %>% time_recompose`` frame looks like
-    before the tail summary (``func.R:96-102``).
-    """
-    keys = list(keys)
-    key_fields = ", ".join(
-        f"{k} {fact.schema[k].dataType.simpleString()}" for k in keys
-    )
-    out_schema = (
-        f"{key_fields}, data_timestamp timestamp, observed double, "
-        "season double, trend double, remainder double, "
-        "remainder_l1 double, remainder_l2 double, "
-        "recomposed_l1 double, recomposed_l2 double, "
-        "score double, anomaly string"
-    )
-
-    def score_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ts_col)
-        vals = pdf[value_col].to_numpy(dtype=np.float64)
-        if len(vals) < 2:
-            return pd.DataFrame(
-                columns=keys + ["data_timestamp", "observed", "season", "trend",
-                                "remainder", "remainder_l1", "remainder_l2",
-                                "recomposed_l1", "recomposed_l2", "score", "anomaly"])
-        season, trend, remainder = decompose(vals, period=period)
-        is_anom, l1, l2 = iqr_anomalize(remainder, alpha=alpha, max_anoms=max_anoms)
-        scores = _score(remainder, l1, l2)
-        out = pd.DataFrame({k: pdf[k].to_numpy() for k in keys})
-        out["data_timestamp"] = pdf[ts_col].to_numpy()
-        out["observed"] = vals
-        out["season"] = season
-        out["trend"] = trend
-        out["remainder"] = remainder
-        out["remainder_l1"] = l1
-        out["remainder_l2"] = l2
-        # time_recompose (func.R:98): band recomposed around observed
-        out["recomposed_l1"] = season + trend + l1
-        out["recomposed_l2"] = season + trend + l2
-        out["score"] = scores
-        out["anomaly"] = np.where(is_anom, "Yes", "No")
-        return out
-
-    slim = fact.select(*keys, ts_col, value_col).repartition(
-        fact.sparkSession.sparkContext.defaultParallelism, *keys
-    )
-    return slim.groupBy(*keys).applyInPandas(score_group, schema=out_schema)

@@ -25,8 +25,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql.functions import udtf
 
 from anomaly_detection_spark.detect.stl import (
-    ALPHA_DEFAULT, MAX_ANOMS_DEFAULT, SECONDS_PER_DAY,
-    _score, decompose, iqr_anomalize,
+    ALPHA_DEFAULT, MAX_ANOMS_DEFAULT, summarize_series,
 )
 
 _RETURN_TYPE = (
@@ -45,8 +44,6 @@ def make_detect_udtf(
 ):
     """Build the UDTF class with the detector config baked in
     (UDTF constructors take no user arguments)."""
-    rep_window = 9 if reference_quirks else 7
-    avg_tail = 8 if reference_quirks else 7
 
     class DetectSeries:
         def __init__(self) -> None:
@@ -58,30 +55,15 @@ def make_detect_udtf(
         def terminate(self):
             import numpy as np
 
-            n = len(self._rows)
-            if n < min_points:
+            if len(self._rows) < min_points:
                 return
             # ORDER BY ts already sorts the feed; re-sort defensively so
             # an unordered call is wrong-free, just slower
             rows = sorted(self._rows, key=lambda r: r[1])
-            k = rows[0][0]
-            ts = [r[1] for r in rows]
             vals = np.array([r[2] for r in rows], dtype=np.float64)
-            season, trend, remainder = decompose(vals, period=period)
-            is_anom, l1, l2 = iqr_anomalize(
-                remainder, alpha=alpha, max_anoms=max_anoms
-            )
-            scores = _score(remainder, l1, l2)
-            last = vals[-1]
-            prior = vals[max(0, n - 1 - rep_window):n - 1]
-            gap = (
-                (ts[-1] - ts[-2]).total_seconds() / SECONDS_PER_DAY
-                if n >= 2 else float("nan")
-            )
-            yield (
-                k, ts[-1], float(last), float(vals[-avg_tail:].mean()),
-                float(scores[-1]), "Yes" if bool(is_anom[-1]) else "No",
-                int((prior == last).sum()), gap,
+            yield (rows[0][0],) + summarize_series(
+                vals, [r[1] for r in rows], period, alpha, max_anoms,
+                reference_quirks,
             )
 
     return udtf(DetectSeries, returnType=_RETURN_TYPE)

@@ -23,11 +23,6 @@ def stable_round(c: Column, n: int) -> Column:
     return F.round(F.round(c, n + 6), n)
 
 
-def sql_stable_round(expr: str, n: int) -> str:
-    """The DuckDB-side twin: round(round(expr, n+6), n)."""
-    return f"round(round({expr}, {n + 6}), {n})"
-
-
 # --- exact integer statistics -----------------------------------------------
 # For decimal-grid inputs (2-dp prices, 4-dp-rounded diffs) the mean
 # frequently lies EXACTLY on the output rounding boundary, where no
@@ -81,24 +76,3 @@ def exact_stddev_samp(sum_q: Column, sum_q2: Column, count: Column,
                  out_dp),
     )
 
-
-def sql_exact_mean(col: str, scale: int, out_dp: int,
-                   partition: str = "") -> str:
-    """DuckDB twin of quantize→sum→divide→round, as a window or plain
-    aggregate (pass ``partition`` like 'OVER wp' for windows)."""
-    q = f"CAST(round({col} * {10**scale}, 0) AS BIGINT)"
-    return (f"round(CAST(sum({q}) {partition} AS DOUBLE)"
-            f" / (count({col}) {partition} * {float(10**scale)}), {out_dp})")
-
-
-def sql_exact_stddev(col: str, scale: int, out_dp: int,
-                     partition: str = "") -> str:
-    q = f"CAST(round({col} * {10**scale}, 0) AS BIGINT)"
-    n = f"count({col}) {partition}"
-    sq = f"sum({q}) {partition}"
-    sq2 = f"sum({q} * {q}) {partition}"
-    return (
-        f"CASE WHEN {n} >= 2 THEN "
-        f"round(sqrt(CAST({n} * {sq2} - {sq} * {sq} AS DOUBLE)"
-        f" / CAST({n} * ({n} - 1) AS DOUBLE)) / {float(10**scale)}, {out_dp}) END"
-    )

@@ -72,28 +72,6 @@ def _affine_params(num_hashes: int, seed: int = 42) -> list[tuple[int, int]]:
     ]
 
 
-def minhash_signature(base_hash_col, num_hashes: int = 64, seed: int = 42):
-    """MinHash signature (array<long>) from a column of per-shingle
-    base hashes in [0, 2^32).
-
-    Each shingle is hashed ONCE (xxhash64, masked to 32 bits); the
-    ``num_hashes`` component functions are affine transforms of that
-    base hash — 64 cheap long-arithmetic passes instead of 64 string
-    re-hashes, and no overflow under ANSI mode (a·x + b < 2^63).
-    """
-    return F.array(*[
-        F.array_min(
-            F.transform(base_hash_col, lambda h: F.pmod(a * h + b, F.lit(_M32)))
-        )
-        for a, b in _affine_params(num_hashes, seed)
-    ])
-
-
-def base_shingle_hashes(shingle_col):
-    """xxhash64 per shingle, masked into [0, 2^32) for affine derivation."""
-    return F.transform(shingle_col, lambda s: F.pmod(F.xxhash64(s), F.lit(_M32)))
-
-
 def _signature_udf(num_hashes: int, shingle_n: int, seed: int = 42):
     """Vectorized minhash kernel: token-hash array → signature.
 
@@ -594,11 +572,9 @@ def simhash_hamming_pairs(
             out.append(int(weights[ones * 2 >= len(a)].sum()))
         return pd.Series(out, dtype="int64")
 
-    from anomaly_detection_spark.pipeline.similarity import (
-        _spread_single_file,
-    )
+    from anomaly_detection_spark.sources.tables import spread_single_file
 
-    h = _spread_single_file(docs).select(
+    h = spread_single_file(docs).select(
         F.col(id_col), _fp(vals_expr).alias("_sh")
     ).persist()
     bands = h.select(

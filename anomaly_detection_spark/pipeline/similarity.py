@@ -19,17 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-
-def _spread_single_file(df: DataFrame) -> DataFrame:
-    """A table backed by fewer files than cores scans as 1-2 partitions
-    — spread rows before CPU-heavy map work / self-joins.  At real
-    scale inputs have many splits and this is a no-op.  (Round 10:
-    canonical implementation moved to ``sources.tables.
-    spread_single_file`` so query-level heavy map paths share it; this
-    alias keeps the module's existing import surface.)"""
-    from anomaly_detection_spark.sources.tables import spread_single_file
-
-    return spread_single_file(df)
+from anomaly_detection_spark.sources.tables import spread_single_file
 
 
 def _dot(a, b):
@@ -277,7 +267,7 @@ def embedding_near_duplicates(
     # a single parquet file scans as 1-2 partitions: spread rows across
     # the cluster before the Arrow kernel and the bucket self-join — at
     # real scale the input has many splits and this is skipped
-    vectors = _spread_single_file(vectors)
+    vectors = spread_single_file(vectors)
     with_buckets = vectors.select(
         F.col(id_col), _buckets(F.col(vec_col)).alias("_bkts")
     )
@@ -777,7 +767,7 @@ def semantic_dedup(
     constant while clusters parallelize perfectly.  The only fact-fact
     shuffle keys on cluster_id; centroids are broadcast.
     """
-    vectors = _spread_single_file(vectors)
+    vectors = spread_single_file(vectors)
     assigned = assign_nearest_centroid(
         vectors, centroids, id_col, vec_col, centroid_id_col
     ).select(id_col, "cluster_id")
@@ -918,7 +908,7 @@ def pq_encode(
     ties to the lower code."""
     n_sub = len(codebooks)
     sub = len(codebooks[0][0])
-    vectors = _spread_single_file(vectors)
+    vectors = spread_single_file(vectors)
     vq = _pq_quantize(vec_col, grid_scale)
     codes = []
     for s in range(n_sub):

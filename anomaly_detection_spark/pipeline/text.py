@@ -13,13 +13,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# tiny per-language stopword seeds for the n-gram language heuristic
-_LANG_MARKERS = {
-    "en": ["the", "and", "of", "to", "a"],
-    "es": ["el", "la", "de", "que", "y"],
-    "fr": ["le", "la", "de", "et", "un"],
-    "de": ["der", "die", "und", "das", "ist"],
-}
+# tiny English stopword seed for the stopword-ratio quality proxy
+_EN_STOPWORDS = ["the", "and", "of", "to", "a"]
 
 
 def text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -52,44 +47,11 @@ def text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
         .withColumn(
             "stopword_ratio",
             F.round(
-                F.size(F.filter(toks, lambda w: F.lower(w).isin(*_LANG_MARKERS["en"])))
+                F.size(F.filter(toks, lambda w: F.lower(w).isin(*_EN_STOPWORDS)))
                 .cast("double") / n_toks,
                 4,
             ),
         )
-    )
-
-
-def token_count_bpe_ish(df: DataFrame, text_col: str = "text",
-                        out_col: str = "n_bpe_tokens") -> DataFrame:
-    """Approximate BPE token count: word-piece regex split (words,
-    numbers, punctuation runs), ~the GPT-2 pre-tokenizer shape."""
-    pieces = F.regexp_extract_all(
-        F.col(text_col), F.lit(r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]+"), 0
-    )
-    return df.withColumn(out_col, F.size(pieces))
-
-
-def language_id(df: DataFrame, text_col: str = "text",
-                out_col: str = "lang_pred") -> DataFrame:
-    """N-gram/stopword-vote language heuristic.
-
-    Counts marker-word hits per language over the token array and
-    takes the argmax ('und' = undetermined when no marker hits).
-    Pure expressions: map over a literal marker table, no UDF.
-    """
-    toks = F.transform(F.split(F.col(text_col), r"\s+"), F.lower)
-    scores = [
-        F.struct(
-            F.size(F.filter(toks, lambda w: w.isin(*markers))).alias("hits"),
-            F.lit(lang).alias("lang"),
-        )
-        for lang, markers in _LANG_MARKERS.items()
-    ]
-    best = F.array_max(F.array(*scores))
-    return df.withColumn(
-        out_col,
-        F.when(best.getField("hits") > 0, best.getField("lang")).otherwise(F.lit("und")),
     )
 
 
@@ -342,7 +304,7 @@ def quality_classifier(
         / F.greatest(F.length(t), F.lit(1)), 4,
     )
     stop = F.round(
-        F.size(F.filter(toks, lambda x: F.lower(x).isin(*_LANG_MARKERS["en"])))
+        F.size(F.filter(toks, lambda x: F.lower(x).isin(*_EN_STOPWORDS)))
         .cast("double") / n_toks, 4,
     )
     dup = F.round(

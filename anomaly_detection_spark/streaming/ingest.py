@@ -223,5 +223,12 @@ def exactly_once_dedup(stream, keys, watermark_col: str = "ts",
     longer than the data span so the test exercises pure state-store
     semantics (nothing is ever late-dropped).
     """
+    from pyspark.sql import functions as F
+
+    # watermarks require TIMESTAMP (LTZ); UTC session makes the NTZ→LTZ
+    # cast the identity on the wall clock
+    stream = stream.withColumn(
+        watermark_col, F.col(watermark_col).cast("timestamp")
+    )
     return stream.withWatermark(watermark_col, delay) \
                  .dropDuplicatesWithinWatermark(keys)

@@ -33,6 +33,54 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 
+def _keyed_state(
+    stream: DataFrame,
+    key: str,
+    ts_col: str,
+    watermark: str,
+    update,
+    out_schema: str,
+    state_schema: str,
+    timeout: str = GroupStateTimeout.NoTimeout,
+    output_mode: str = "append",
+) -> DataFrame:
+    """Watermarked per-key ``applyInPandasWithState`` — the chain every
+    keyed-state lane shares."""
+    # watermarks require TIMESTAMP (LTZ); UTC session makes the NTZ→LTZ
+    # cast the identity on the wall clock
+    stream = stream.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
+    return (
+        stream.withWatermark(ts_col, watermark)
+        .groupBy(key)
+        .applyInPandasWithState(
+            update, out_schema, state_schema, output_mode, timeout
+        )
+    )
+
+
+class _HighWaterMark:
+    """One key's in-order arrival filter: :meth:`arrivals` yields the
+    micro-batch's ``(ts, ts_us, value)`` rows in event-time order,
+    skipping (and counting in ``late``) every row at or before the
+    key's newest event time ``max_ts_us``."""
+
+    def __init__(self, max_ts_us: int, late: int = 0):
+        self.max_ts_us = max_ts_us
+        self.late = late
+
+    def arrivals(self, pdfs: Iterator[pd.DataFrame], ts_col: str,
+                 value_col: str):
+        for pdf in pdfs:
+            pdf = pdf.sort_values(ts_col)
+            for ts, v in zip(pdf[ts_col], pdf[value_col]):
+                ts_us = int(pd.Timestamp(ts).value // 1000)
+                if ts_us <= self.max_ts_us:
+                    self.late += 1
+                    continue
+                self.max_ts_us = ts_us
+                yield ts, ts_us, v
+
+
 def windowed_series_stats(
     stream: DataFrame,
     keys: Sequence[str],
@@ -95,26 +143,20 @@ def stateful_run_length(
             last_value, run_len, max_ts_us, pending_late = state.get
         else:
             last_value, run_len, max_ts_us, pending_late = None, 0, -1, 0
+        hwm = _HighWaterMark(max_ts_us, pending_late)
         rows = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values(ts_col)
-            for ts, v in zip(pdf[ts_col], pdf[value_col]):
-                ts_us = int(pd.Timestamp(ts).value // 1000)
-                if ts_us <= max_ts_us:
-                    pending_late += 1
-                    continue
-                max_ts_us = ts_us
-                if last_value is not None and v == last_value:
-                    run_len += 1
-                else:
-                    run_len = 1
-                last_value = float(v)
-                rows.append((
-                    key_tuple[0], ts, float(v), run_len,
-                    1 if run_len >= value_rep_lim else 0, pending_late,
-                ))
-                pending_late = 0
-        state.update((last_value, run_len, max_ts_us, pending_late))
+        for ts, _ts_us, v in hwm.arrivals(pdfs, ts_col, value_col):
+            if last_value is not None and v == last_value:
+                run_len += 1
+            else:
+                run_len = 1
+            last_value = float(v)
+            rows.append((
+                key_tuple[0], ts, float(v), run_len,
+                1 if run_len >= value_rep_lim else 0, hwm.late,
+            ))
+            hwm.late = 0
+        state.update((last_value, run_len, hwm.max_ts_us, hwm.late))
         if rows:
             yield pd.DataFrame(
                 rows,
@@ -122,15 +164,8 @@ def stateful_run_length(
                          "data_repetitions_flag", "late_dropped"],
             )
 
-    stream = stream.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(key)
-        .applyInPandasWithState(
-            update, out_schema, state_schema, "append",
-            GroupStateTimeout.NoTimeout,
-        )
-    )
+    return _keyed_state(stream, key, ts_col, watermark, update, out_schema,
+                        state_schema)
 
 
 def stateful_trailing_flags(
@@ -174,47 +209,43 @@ def stateful_trailing_flags(
             ts_us_list, vals_list = list(ts_us_list), list(vals_list)
         else:
             ts_us_list, vals_list, run_len, max_ts_us = [], [], 0, -1
+        hwm = _HighWaterMark(max_ts_us)
         rows = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values(ts_col)
-            for ts, v in zip(pdf[ts_col], pdf[value_col]):
-                ts_us = int(pd.Timestamp(ts).value // 1000)
-                if ts_us <= max_ts_us:
-                    continue  # late row: drop (watermark policy)
-                max_ts_us = ts_us
-                v = round(float(v), 4)
-                run_len = run_len + 1 if (vals_list and vals_list[-1] == v) else 1
-                ts_us_list.append(ts_us)
-                vals_list.append(v)
-                if len(vals_list) > data_periods:
-                    ts_us_list = ts_us_list[-data_periods:]
-                    vals_list = vals_list[-data_periods:]
-                varr = np.asarray(vals_list)
-                tarr = np.asarray(ts_us_list, dtype=np.int64)
-                diffs = np.abs(np.round(np.diff(varr), 4))
-                gaps_days = np.diff(tarr) / 86400e6
-                cur_diff = float(diffs[-1]) if len(diffs) else float("nan")
-                avg = float(np.round(diffs.mean(), 4)) if len(diffs) else float("nan")
-                std = (
-                    float(np.round(diffs.std(ddof=1), 4)) if len(diffs) >= 2 else 0.0
-                )
-                z = round(abs(cur_diff - avg) / std, 4) if std else 0.0
-                avg_gap = float(np.round(gaps_days.mean(), 6)) if len(gaps_days) else float("nan")
-                # staleness at ingest time = gap since previous obs vs mean gap
-                cur_gap = float(gaps_days[-1]) if len(gaps_days) else 0.0
-                sd_flag = 1 if (len(diffs) and z >= stddev_lim) else 0
-                rep_flag = 1 if run_len >= value_rep_lim else 0
-                stale_flag = (
-                    1 if (len(gaps_days) >= 2 and cur_gap > update_lim * avg_gap) else 0
-                )
-                rows.append((
-                    key_tuple[0], ts, v,
-                    cur_diff if len(diffs) else None, avg if len(diffs) else None,
-                    std, z, run_len, avg_gap if len(gaps_days) else None,
-                    sd_flag, rep_flag, stale_flag,
-                    1 if (sd_flag or rep_flag or stale_flag) else 0,
-                ))
-        state.update((ts_us_list, vals_list, run_len, max_ts_us))
+        # late rows are dropped (watermark policy)
+        for ts, ts_us, v in hwm.arrivals(pdfs, ts_col, value_col):
+            v = round(float(v), 4)
+            run_len = run_len + 1 if (vals_list and vals_list[-1] == v) else 1
+            ts_us_list.append(ts_us)
+            vals_list.append(v)
+            if len(vals_list) > data_periods:
+                ts_us_list = ts_us_list[-data_periods:]
+                vals_list = vals_list[-data_periods:]
+            varr = np.asarray(vals_list)
+            tarr = np.asarray(ts_us_list, dtype=np.int64)
+            diffs = np.abs(np.round(np.diff(varr), 4))
+            gaps_days = np.diff(tarr) / 86400e6
+            cur_diff = float(diffs[-1]) if len(diffs) else float("nan")
+            avg = float(np.round(diffs.mean(), 4)) if len(diffs) else float("nan")
+            std = (
+                float(np.round(diffs.std(ddof=1), 4)) if len(diffs) >= 2 else 0.0
+            )
+            z = round(abs(cur_diff - avg) / std, 4) if std else 0.0
+            avg_gap = float(np.round(gaps_days.mean(), 6)) if len(gaps_days) else float("nan")
+            # staleness at ingest time = gap since previous obs vs mean gap
+            cur_gap = float(gaps_days[-1]) if len(gaps_days) else 0.0
+            sd_flag = 1 if (len(diffs) and z >= stddev_lim) else 0
+            rep_flag = 1 if run_len >= value_rep_lim else 0
+            stale_flag = (
+                1 if (len(gaps_days) >= 2 and cur_gap > update_lim * avg_gap) else 0
+            )
+            rows.append((
+                key_tuple[0], ts, v,
+                cur_diff if len(diffs) else None, avg if len(diffs) else None,
+                std, z, run_len, avg_gap if len(gaps_days) else None,
+                sd_flag, rep_flag, stale_flag,
+                1 if (sd_flag or rep_flag or stale_flag) else 0,
+            ))
+        state.update((ts_us_list, vals_list, run_len, hwm.max_ts_us))
         if rows:
             yield pd.DataFrame(rows, columns=[
                 key, "ts", "value", "absolute_one_period_difference",
@@ -225,15 +256,8 @@ def stateful_trailing_flags(
                 "anomaly",
             ])
 
-    stream = stream.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(key)
-        .applyInPandasWithState(
-            update, out_schema, state_schema, "append",
-            GroupStateTimeout.NoTimeout,
-        )
-    )
+    return _keyed_state(stream, key, ts_col, watermark, update, out_schema,
+                        state_schema)
 
 
 def stateful_stl_scores(
@@ -273,49 +297,38 @@ def stateful_stl_scores(
             ts_us_list, vals_list = list(ts_us_list), list(vals_list)
         else:
             ts_us_list, vals_list, max_ts_us = [], [], -1
+        hwm = _HighWaterMark(max_ts_us)
         rows = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values(ts_col)
-            for ts, v in zip(pdf[ts_col], pdf[value_col]):
-                ts_us = int(pd.Timestamp(ts).value // 1000)
-                if ts_us <= max_ts_us:
-                    continue  # late: drop per watermark policy
-                max_ts_us = ts_us
-                ts_us_list.append(ts_us)
-                vals_list.append(float(v))
-                if len(vals_list) > data_periods:
-                    ts_us_list = ts_us_list[-data_periods:]
-                    vals_list = vals_list[-data_periods:]
-                arr = np.asarray(vals_list)
-                if len(arr) < 4:
-                    rows.append((key_tuple[0], ts, float(v),
-                                 None, None, None, None, "No"))
-                    continue
-                _season, _trend, rem = decompose(arr, period=period)
-                is_anom, l1, l2 = iqr_anomalize(rem)
-                sc = _score(rem, l1, l2)
-                rows.append((
-                    key_tuple[0], ts, float(v), float(rem[-1]),
-                    float(l1), float(l2),
-                    float(sc[-1]) if np.isfinite(sc[-1]) else None,
-                    "Yes" if bool(is_anom[-1]) else "No",
-                ))
-        state.update((ts_us_list, vals_list, max_ts_us))
+        # late rows are dropped (watermark policy)
+        for ts, ts_us, v in hwm.arrivals(pdfs, ts_col, value_col):
+            ts_us_list.append(ts_us)
+            vals_list.append(float(v))
+            if len(vals_list) > data_periods:
+                ts_us_list = ts_us_list[-data_periods:]
+                vals_list = vals_list[-data_periods:]
+            arr = np.asarray(vals_list)
+            if len(arr) < 4:
+                rows.append((key_tuple[0], ts, float(v),
+                             None, None, None, None, "No"))
+                continue
+            _season, _trend, rem = decompose(arr, period=period)
+            is_anom, l1, l2 = iqr_anomalize(rem)
+            sc = _score(rem, l1, l2)
+            rows.append((
+                key_tuple[0], ts, float(v), float(rem[-1]),
+                float(l1), float(l2),
+                float(sc[-1]) if np.isfinite(sc[-1]) else None,
+                "Yes" if bool(is_anom[-1]) else "No",
+            ))
+        state.update((ts_us_list, vals_list, hwm.max_ts_us))
         if rows:
             yield pd.DataFrame(rows, columns=[
                 key, "ts", "value", "remainder", "remainder_l1",
                 "remainder_l2", "score", "anomaly",
             ])
 
-    stream = stream.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(key)
-        .applyInPandasWithState(
-            update, out_schema, state_schema, "append",
-            GroupStateTimeout.NoTimeout,
-        )
-    )
+    return _keyed_state(stream, key, ts_col, watermark, update, out_schema,
+                        state_schema)
 
 
 def _make_staleness_update(key: str, ts_col: str, stale_after_seconds: float):
@@ -383,16 +396,9 @@ def staleness_monitor(
     )
     state_schema = "last_ts_us long, alerted boolean"
     update = _make_staleness_update(key, ts_col, stale_after_seconds)
-
-    stream = stream.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(key)
-        .applyInPandasWithState(
-            update, out_schema, state_schema, "update",
-            GroupStateTimeout.ProcessingTimeTimeout,
-        )
-    )
+    return _keyed_state(stream, key, ts_col, watermark, update, out_schema,
+                        state_schema, GroupStateTimeout.ProcessingTimeTimeout,
+                        "update")
 
 
 def _make_session_histogram_update(key, ts_col, type_col, gap_seconds):
@@ -481,15 +487,8 @@ def stateful_session_histogram(
         "counts array<long>"
     )
     update = _make_session_histogram_update(key, ts_col, type_col, gap_seconds)
-    stream = stream.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(key)
-        .applyInPandasWithState(
-            update, out_schema, state_schema, "append",
-            GroupStateTimeout.EventTimeTimeout,
-        )
-    )
+    return _keyed_state(stream, key, ts_col, watermark, update, out_schema,
+                        state_schema, GroupStateTimeout.EventTimeTimeout)
 
 
 def windowed_distinct_sketch(

@@ -1,17 +1,11 @@
-"""Run-length counting on the transformWithStateInPandas API.
+"""A drawdown monitor on the transformWithStateInPandas API.
 
 Spark 4's ``transformWithState`` supersedes ``applyInPandasWithState``
 with typed per-key state handles (ValueState/ListState/MapState),
-event-time timers, and state-schema evolution. This module carries the
-engine's consecutive-repetition counter (the streaming W10/W11,
-SURVEY.md §2.10) on the new API; semantics match
-``rules_stream.stateful_run_length`` exactly, and the parity test
-drives both over the same replay.
-
-State per key is one fixed-width ValueState row — O(1) per live key,
-RocksDB-backed on a real cluster — versus the old API's whole-tuple
-get/update. Timers (unused here, used by the staleness monitor) and
-TTL come from the same handle.
+event-time timers, and state-schema evolution: per-key state is read
+and written through those handles — O(1) per live key, RocksDB-backed
+on a real cluster — instead of the old API's whole-tuple get/update.
+The runtime needs ``google.protobuf`` for its state-server protocol.
 """
 
 from __future__ import annotations
@@ -21,70 +15,12 @@ from typing import Iterator
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.streaming.stateful_processor import (
     StatefulProcessor, StatefulProcessorHandle,
 )
 from pyspark.sql.types import (
-    DoubleType, IntegerType, LongType, StructField, StructType, TimestampNTZType,
+    IntegerType, LongType, StructField, StructType, TimestampNTZType,
 )
-
-_STATE_SCHEMA = StructType([
-    StructField("last_value", DoubleType()),
-    StructField("run_len", LongType()),
-    StructField("max_ts_us", LongType()),
-    StructField("pending_late", LongType()),
-])
-
-
-class RunLengthProcessor(StatefulProcessor):
-    """Per-key consecutive-duplicate counter with late-row dropping."""
-
-    def __init__(self, key: str, ts_col: str, value_col: str,
-                 value_rep_lim: int = 3):
-        self._key = key
-        self._ts = ts_col
-        self._value = value_col
-        self._lim = value_rep_lim
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._state = handle.getValueState("run_state", _STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-        if self._state.exists():
-            last_value, run_len, max_ts_us, pending_late = self._state.get()
-        else:
-            last_value, run_len, max_ts_us, pending_late = None, 0, -1, 0
-        out = []
-        for pdf in rows:
-            pdf = pdf.sort_values(self._ts)
-            for ts, v in zip(pdf[self._ts], pdf[self._value]):
-                ts_us = int(pd.Timestamp(ts).value // 1000)
-                if ts_us <= max_ts_us:
-                    pending_late += 1
-                    continue
-                max_ts_us = ts_us
-                if last_value is not None and v == last_value:
-                    run_len += 1
-                else:
-                    run_len = 1
-                last_value = float(v)
-                out.append((
-                    key[0], ts, float(v), run_len,
-                    1 if run_len >= self._lim else 0, pending_late,
-                ))
-                pending_late = 0
-        self._state.update((last_value, run_len, max_ts_us, pending_late))
-        if out:
-            yield pd.DataFrame(
-                out,
-                columns=[self._key, "ts", "value", "data_repetitions",
-                         "data_repetitions_flag", "late_dropped"],
-            )
-
-    def close(self) -> None:
-        pass
-
 
 _PEAK_SCHEMA = StructType([StructField("peak_cents", LongType())])
 _BUCKET_KEY_SCHEMA = StructType([StructField("bucket", LongType())])
@@ -165,32 +101,3 @@ def tws_drawdown(stream: DataFrame) -> DataFrame:
         timeMode="None",
     )
 
-
-def tws_run_length(
-    stream: DataFrame,
-    key: str,
-    ts_col: str,
-    value_col: str,
-    value_rep_lim: int = 3,
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """transformWithStateInPandas twin of ``stateful_run_length``."""
-    out_schema = StructType([
-        StructField(key, LongType()),
-        StructField("ts", TimestampNTZType()),
-        StructField("value", DoubleType()),
-        StructField("data_repetitions", LongType()),
-        StructField("data_repetitions_flag", IntegerType()),
-        StructField("late_dropped", LongType()),
-    ])
-    stream = stream.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(key)
-        .transformWithStateInPandas(
-            RunLengthProcessor(key, ts_col, value_col, value_rep_lim),
-            outputStructType=out_schema,
-            outputMode="Append",
-            timeMode="None",
-        )
-    )

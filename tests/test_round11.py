@@ -32,12 +32,35 @@ def test_sparse_cosine_gram_exchange_is_aqe_ownable(spark):
     assert any("REPARTITION_BY_COL" in ln for ln in lines), lines
 
 
+def _children(lines, i):
+    """The subtree line blocks of each child of the plan node on line i
+    of a physical plan's tree string."""
+    def depth(ln):
+        return len(ln) - len(ln.lstrip(" :+-"))
+
+    below = []
+    for ln in lines[i + 1:]:
+        if depth(ln) <= depth(lines[i]):
+            break
+        below.append(ln)
+    top = min(map(depth, below))
+    starts = [k for k, ln in enumerate(below) if depth(ln) == top]
+    return [below[a:b] for a, b in zip(starts, starts[1:] + [len(below)])]
+
+
 def test_ndcg_candidate_leg_is_spread(spark):
-    plan = (
+    lines = (
         reg.QUERIES["ndcg_dup_retrieval"](spark, SF_DIR)
-        ._jdf.queryExecution().executedPlan().toString()
+        ._jdf.queryExecution().executedPlan().toString().splitlines()
     )
-    assert "RoundRobinPartitioning" in plan, (
+    (join,) = [i for i, ln in enumerate(lines) if "BroadcastNestedLoopJoin" in ln]
+    (candidates,) = [
+        c for c in _children(lines, join) if "BroadcastExchange" not in c[0]
+    ]
+    # the candidate leg: tokenize (ws) directly over the round-robin
+    # spread, so tokenize + 5x jaccard run on the spread partitions
+    assert " AS ws#" in candidates[0], candidates[0]
+    assert "Exchange RoundRobinPartitioning" in candidates[1], (
         "candidate-leg spread disappeared — the tokenize + 5x jaccard "
         "map work would serialize on the input's scan partitions"
     )

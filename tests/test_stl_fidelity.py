@@ -1,9 +1,9 @@
-"""Fidelity pin for the vendored LOESS STL fallback.
+"""Fidelity pin for the vendored LOESS STL.
 
 The reference decomposes with R's ``stl(s.window="periodic",
 robust=TRUE)`` then flags IQR outliers of the remainder
-(``func.R:96``, ``model.R:13-17``).  No statsmodels/R exists in the
-container, so fidelity is pinned against an ANALYTICALLY KNOWN
+(``func.R:96``, ``model.R:13-17``).  Without R to diff against,
+fidelity is pinned against an ANALYTICALLY KNOWN
 generating process instead: season + trend + noise are constructed, and
 any correct STL must recover each component within tight tolerances —
 including the IQR band VALUES, not just "a spike is flagged".
@@ -74,20 +74,12 @@ def test_iqr_bands_match_analytic_values():
 
 def test_decompose_dispatches_to_loess_stl():
     """decompose() must route long-enough series through the vendored
-    STL (statsmodels absent in this container) and reproduce it."""
+    STL and reproduce it exactly."""
     y, _, _ = _series()
     s1, t1, r1 = decompose(y, period=PERIOD, robust=True)
     s2, t2, r2 = stl_periodic(y, period=PERIOD, robust=True)
-    try:
-        import statsmodels  # noqa: F401
-        has_sm = True
-    except ImportError:
-        has_sm = False
-    if not has_sm:
-        assert np.allclose(s1, s2) and np.allclose(t1, t2) and np.allclose(r1, r2)
-    else:  # statsmodels present: decompose uses it; agreement is loose
-        assert np.max(np.abs(s1 - s2)) < 0.3
-        assert np.max(np.abs(t1[PERIOD:-PERIOD] - t2[PERIOD:-PERIOD])) < 0.5
+    assert np.array_equal(s1, s2) and np.array_equal(t1, t2)
+    assert np.array_equal(r1, r2)
 
 
 def test_stl_robust_vs_nonrobust_spike_leverage():

@@ -12,7 +12,9 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from anomaly_detection_spark.streaming.joins import stream_dedup, stream_interval_join
+from anomaly_detection_spark.streaming.ingest import exactly_once_dedup
+from anomaly_detection_spark.streaming.joins import stream_interval_join
+from anomaly_detection_spark.streaming.replay import replay
 
 SCHEMA = T.StructType([
     T.StructField("event_id", T.LongType()),
@@ -41,82 +43,57 @@ ROWS = [
 
 
 @pytest.fixture()
-def replay(spark):
+def workdir():
     d = tempfile.mkdtemp()
-    src = os.path.join(d, "src")
-    os.makedirs(src)
-    for i, chunk in enumerate([ROWS[:4], ROWS[4:]]):
-        spark.createDataFrame(chunk, SCHEMA).coalesce(1).write.parquet(
-            os.path.join(src, f"b{i}")
-        )
-    yield src
+    yield d
     shutil.rmtree(d, ignore_errors=True)
 
 
-def _stream(spark, src):
-    return (
-        spark.readStream.schema(SCHEMA)
-        .option("maxFilesPerTrigger", 1).parquet(src + "/*")
+def _batches(spark, chunks):
+    return [[spark.createDataFrame(chunk, SCHEMA) for chunk in chunks]]
+
+
+def _interval_join(stream, err_id, pur_id, **kw):
+    """Errors joined to purchases of the same user in [e_ts, e_ts+30m)."""
+    errors = stream.where(F.col("kind") == "error").select(
+        F.col("event_id").alias(err_id), "user_id", F.col("ts").alias("e_ts")
+    )
+    purchases = stream.where(F.col("kind") == "purchase").select(
+        F.col("event_id").alias(pur_id), "user_id", F.col("ts").alias("p_ts"),
+    )
+    return stream_interval_join(
+        errors, purchases, ["user_id"], "e_ts", "p_ts", 1800, **kw
     )
 
 
-def _drain(spark, df, name):
-    q = (
-        df.writeStream.format("memory").queryName(name).outputMode("append")
-        .option("checkpointLocation", tempfile.mkdtemp())
-        .trigger(availableNow=True).start()
+def test_stream_interval_join_matches_batch(spark):
+    joined = replay(
+        _batches(spark, [ROWS[:4], ROWS[4:]]),
+        lambda s: _interval_join(s, "error_id", "purchase_id"),
     )
-    q.awaitTermination(120)
-    return spark.sql(f"select * from {name}")
-
-
-def test_stream_interval_join_matches_batch(spark, replay):
-    s = _stream(spark, replay)
-    errors = s.where(F.col("kind") == "error").select(
-        F.col("event_id").alias("error_id"), "user_id", F.col("ts").alias("e_ts")
-    )
-    purchases = s.where(F.col("kind") == "purchase").select(
-        F.col("event_id").alias("purchase_id"), "user_id",
-        F.col("ts").alias("p_ts"),
-    )
-    joined = stream_interval_join(
-        errors, purchases, keys=["user_id"],
-        left_ts="e_ts", right_ts="p_ts", interval_seconds=1800,
-    )
-    got = sorted(
-        (r.error_id, r.purchase_id) for r in _drain(spark, joined, "ssj").collect()
-    )
+    got = sorted((r.error_id, r.purchase_id) for r in joined.collect())
     assert got == [(1, 2), (4, 5), (7, 8)]
 
 
 def test_stream_dedup_within_watermark(spark):
-    d = tempfile.mkdtemp()
-    src = os.path.join(d, "src")
-    os.makedirs(src)
     # same event_id delivered in two consecutive micro-batches
     b1 = [_mk(1, 1, 0, "error"), _mk(2, 1, 1, "purchase")]
     b2 = [_mk(2, 1, 1, "purchase"), _mk(3, 1, 2, "view")]
-    for i, chunk in enumerate([b1, b2]):
-        spark.createDataFrame(chunk, SCHEMA).coalesce(1).write.parquet(
-            os.path.join(src, f"b{i}")
-        )
-    try:
-        deduped = stream_dedup(_stream(spark, src), ["event_id"], "ts")
-        got = sorted(r.event_id for r in _drain(spark, deduped, "sdd").collect())
-        assert got == [1, 2, 3]
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    deduped = replay(
+        _batches(spark, [b1, b2]),
+        lambda s: exactly_once_dedup(s, ["event_id"]),
+    )
+    assert sorted(r.event_id for r in deduped.collect()) == [1, 2, 3]
 
 
-def test_streaming_curated_ingest(spark):
+def test_streaming_curated_ingest(spark, workdir):
     """Each microbatch is curated against the already-accepted corpus:
     exact and near copies of earlier-ingested docs are dropped, fresh
     docs are appended — including near-dups of docs accepted in a
     PREVIOUS trigger."""
-    import tempfile, shutil, os
     from anomaly_detection_spark.streaming.ingest import make_curated_ingest
 
-    d = tempfile.mkdtemp()
+    d = workdir
     src = os.path.join(d, "src")
     corpus = os.path.join(d, "corpus")
     ckpt = os.path.join(d, "ckpt")
@@ -159,25 +136,20 @@ def test_streaming_curated_ingest(spark):
     q.awaitTermination(120)
 
     got = {r.doc_id for r in spark.read.parquet(corpus).collect()}
-    shutil.rmtree(d, ignore_errors=True)
     assert got == {0, 1, 2, 10, 20}, got
 
 
-def test_streaming_incremental_rollup(spark):
+def test_streaming_incremental_rollup(spark, workdir):
     """Three triggers of events maintain a per-user rollup state; the
     final state must equal the full GROUP BY over everything fed —
     merge == recompute, continuously."""
-    import os
-    import tempfile
-
-    from pyspark.sql import functions as F
 
     from anomaly_detection_spark.streaming.ingest import (
         make_incremental_rollup, read_rollup_state,
     )
 
-    d = tempfile.mkdtemp()
-    src, state, ckpt = (os.path.join(d, x) for x in ("src", "state", "ckpt"))
+    src, state, ckpt = (os.path.join(workdir, x)
+                        for x in ("src", "state", "ckpt"))
     os.makedirs(src)
     schema = "user_id long, v long"
 
@@ -225,20 +197,16 @@ def test_streaming_incremental_rollup(spark):
     assert len(glob.glob(os.path.join(state, "v=*"))) >= 3
 
 
-def test_incremental_rollup_redelivery_idempotent(spark):
+def test_incremental_rollup_redelivery_idempotent(spark, workdir):
     """A crashed trigger redelivers its batch with the SAME batch id;
     the stamped version directory is the transaction marker, so the
     second delivery must not double-merge."""
-    import os
-    import tempfile
-
-    from pyspark.sql import functions as F
 
     from anomaly_detection_spark.streaming.ingest import (
         make_incremental_rollup, read_rollup_state,
     )
 
-    state = os.path.join(tempfile.mkdtemp(), "state")
+    state = os.path.join(workdir, "state")
     on_batch = make_incremental_rollup(
         state, keys=["k"],
         updates={"n": F.count("v"), "s": F.sum("v")},
@@ -255,21 +223,18 @@ def test_incremental_rollup_redelivery_idempotent(spark):
     assert got == {1: (3, 115)}
 
 
-def test_streaming_cdc_apply_matches_batch(spark):
+def test_streaming_cdc_apply_matches_batch(spark, workdir):
     """Three triggers of CDC changes maintain the current-state table;
     the final live view must equal batch cdc_apply over everything fed
     — including a delete, a later-seq resurrect, and a late lower-seq
     row that must NOT resurrect a deleted key."""
-    import os
-    import tempfile
-
     from anomaly_detection_spark.operators.upsert import cdc_apply
     from anomaly_detection_spark.streaming.ingest import (
         make_cdc_apply, read_cdc_state,
     )
 
-    d = tempfile.mkdtemp()
-    src, state, ckpt = (os.path.join(d, x) for x in ("src", "state", "ckpt"))
+    src, state, ckpt = (os.path.join(workdir, x)
+                        for x in ("src", "state", "ckpt"))
     os.makedirs(src)
     schema = "key long, seq long, op string, val double"
 
@@ -305,18 +270,11 @@ def test_streaming_cdc_apply_matches_batch(spark):
     assert keys == {1, 3}
 
 
-def test_stream_interval_join_outer_emits_unmatched_after_watermark(spark):
+def test_stream_interval_join_left_outer_emits_unmatched_after_watermark(spark):
     """LEFT OUTER stream-stream interval join: the matched pair emits
     normally; an error with NO purchase in its 30-min interval emits
     with NULL right columns once the watermark proves no match can
     still arrive; a still-open left row does not emit."""
-    from anomaly_detection_spark.streaming.joins import (
-        stream_interval_join_outer,
-    )
-
-    d = tempfile.mkdtemp()
-    src = os.path.join(d, "src")
-    os.makedirs(src)
     batches = [
         [_mk(1, 1, 0, "error"), _mk(2, 1, 10, "purchase"),
          _mk(3, 2, 0, "error")],                 # u2: never matched
@@ -324,33 +282,11 @@ def test_stream_interval_join_outer_emits_unmatched_after_watermark(spark):
         [_mk(5, 8, 302, "purchase")],            # extra trigger (user 8:
                                                  # right-only, never emits)
     ]
-    for i, chunk in enumerate(batches):
-        spark.createDataFrame(chunk, SCHEMA).coalesce(1).write.parquet(
-            os.path.join(src, f"b{i}")
-        )
-    stream = _stream(spark, src)
-    errors = stream.where(F.col("kind") == "error").select(
-        F.col("event_id").alias("err_id"), "user_id",
-        F.col("ts").alias("err_ts"),
+    out = replay(
+        _batches(spark, batches),
+        lambda s: _interval_join(s, "err_id", "pur_id", how="leftOuter"),
     )
-    purchases = stream.where(F.col("kind") == "purchase").select(
-        F.col("event_id").alias("pur_id"), "user_id",
-        F.col("ts").alias("pur_ts"),
-    )
-    out = stream_interval_join_outer(
-        errors, purchases, ["user_id"], "err_ts", "pur_ts",
-        interval_seconds=1800, watermark="30 minutes",
-    )
-    q = (
-        out.writeStream.outputMode("append").format("memory")
-        .queryName("soj").option("checkpointLocation", tempfile.mkdtemp())
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    rows = {r.err_id: (r.pur_id, r.pur_ts)
-            for r in spark.sql("SELECT * FROM soj").collect()}
+    rows = {r.err_id: (r.pur_id, r.p_ts) for r in out.collect()}
     assert rows[1] == (2, BASE + dt.timedelta(minutes=10))
     assert rows[3] == (None, None)   # watermark-proven unmatched
     assert 4 not in rows             # still open, must not emit
-    shutil.rmtree(d, ignore_errors=True)

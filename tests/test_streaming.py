@@ -1,5 +1,6 @@
 """Streaming tests: micro-batch replays through file sources → memory
-sink, including out-of-order late data (SURVEY.md §5 streaming tests)."""
+sink (streaming/replay.py), including out-of-order late data (SURVEY.md
+§5 streaming tests)."""
 
 from __future__ import annotations
 
@@ -12,6 +13,7 @@ import pytest
 
 from pyspark.sql import types as T
 
+from anomaly_detection_spark.streaming.replay import replay
 from anomaly_detection_spark.streaming.rules_stream import (
     stateful_run_length, windowed_series_stats,
 )
@@ -28,16 +30,9 @@ def _write_batch(spark, path, rows, n):
     df.coalesce(1).write.mode("overwrite").parquet(os.path.join(path, f"b{n}"))
 
 
-def _drain(spark, stream_df, name, src_dirs):
-    q = (
-        stream_df.writeStream.outputMode("append")
-        .format("memory").queryName(name)
-        .option("checkpointLocation", tempfile.mkdtemp())
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return spark.sql(f"SELECT * FROM {name}")
+def _run_length(stream):
+    return stateful_run_length(stream, "user_id", "ts", "value",
+                               value_rep_lim=3)
 
 
 @pytest.fixture()
@@ -47,36 +42,27 @@ def stream_dir():
     shutil.rmtree(d, ignore_errors=True)
 
 
-def test_stateful_run_length_across_batches(spark, stream_dir):
+def test_stateful_run_length_across_batches(spark):
     """Run state must survive micro-batch boundaries: a run of 3 split
     across two batches still trips the flag."""
     base = dt.datetime(2024, 1, 1)
-    src = os.path.join(stream_dir, "src")
-    os.makedirs(src)
     # batch 1: two repeats of 5.0
-    _write_batch(spark, src, [
+    b1 = spark.createDataFrame([
         (1, base + dt.timedelta(minutes=0), 1.0),
         (1, base + dt.timedelta(minutes=1), 5.0),
         (1, base + dt.timedelta(minutes=2), 5.0),
-    ], 1)
-    stream = spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", 1).parquet(src + "/*")
-    out = stateful_run_length(stream, "user_id", "ts", "value", value_rep_lim=3)
-    res1 = _drain(spark, out, "rl1", src).collect()
-    by_ts = {r.ts: r for r in res1}
+    ], SCHEMA)
+    by_ts = {r.ts: r for r in replay([[b1]], _run_length).collect()}
     assert by_ts[base + dt.timedelta(minutes=2)].data_repetitions == 2
 
     # batch 2: third repeat + an out-of-order stale row
-    _write_batch(spark, src, [
+    b2 = spark.createDataFrame([
         (1, base + dt.timedelta(minutes=3), 5.0),
         (1, base + dt.timedelta(minutes=1, seconds=30), 9.9),  # late, dropped
         (1, base + dt.timedelta(minutes=4), 7.0),
-    ], 2)
-    # NOTE: memory-sink rerun re-reads from checkpoint-less temp; simplest
-    # correct pattern for the test is a fresh query over both batches.
-    stream2 = spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", 1).parquet(src + "/*")
-    out2 = stateful_run_length(stream2, "user_id", "ts", "value", value_rep_lim=3)
-    res2 = _drain(spark, out2, "rl2", src).collect()
-    by_ts = {r.ts: r for r in res2}
+    ], SCHEMA)
+    # a memory sink cannot resume, so replay both batches afresh
+    by_ts = {r.ts: r for r in replay([[b1, b2]], _run_length).collect()}
     third = by_ts[base + dt.timedelta(minutes=3)]
     assert third.data_repetitions == 3
     assert third.data_repetitions_flag == 1
@@ -89,7 +75,7 @@ def test_stateful_run_length_across_batches(spark, stream_dir):
     assert by_ts[base + dt.timedelta(minutes=4)].data_repetitions == 1
 
 
-def test_stateful_trailing_flags_matches_batch(spark, stream_dir):
+def test_stateful_trailing_flags_matches_batch(spark):
     """Streaming rule engine vs batch rule engine on the planted
     fixture: the same spike / repetition verdicts must come out for
     each series' final observation (the batch-streaming differential
@@ -105,15 +91,9 @@ def test_stateful_trailing_flags_matches_batch(spark, stream_dir):
         "series_id", F.col("index_id") * 1000 + F.col("granularity_item_id")
     ).select("series_id", "data_timestamp", "data_value")
 
-    src = os.path.join(stream_dir, "src")
-    os.makedirs(src)
-    fixture.coalesce(1).write.parquet(os.path.join(src, "b1"))
-    sch = "series_id long, data_timestamp timestamp_ntz, data_value double"
-    stream = spark.readStream.schema(sch).parquet(src + "/*")
-    out = stateful_trailing_flags(
-        stream, "series_id", "data_timestamp", "data_value"
-    )
-    res = _drain(spark, out, "tf1", src)
+    res = replay([[fixture]], lambda s: stateful_trailing_flags(
+        s, "series_id", "data_timestamp", "data_value"
+    ))
     # newest row per series from the stream output
     from pyspark.sql.window import Window
     w = Window.partitionBy("series_id").orderBy(F.col("ts").desc())
@@ -138,7 +118,7 @@ def test_stateful_trailing_flags_matches_batch(spark, stream_dir):
         assert s.data_repetitions == b.data_repetitions, sid
 
 
-def test_stateful_stl_matches_batch_verdict(spark, stream_dir):
+def test_stateful_stl_matches_batch_verdict(spark):
     """Streaming decomposition scores: the final arrival's verdict per
     series must match the batch STL engine run over the same trailing
     window (the spike series says Yes, clean series say No)."""
@@ -150,13 +130,9 @@ def test_stateful_stl_matches_batch_verdict(spark, stream_dir):
     fixture = fixture_df(spark).withColumn(
         "series_id", F.col("index_id") * 1000 + F.col("granularity_item_id")
     ).select("series_id", "data_timestamp", "data_value")
-    src = os.path.join(stream_dir, "src")
-    os.makedirs(src)
-    fixture.coalesce(1).write.parquet(os.path.join(src, "b1"))
-    sch = "series_id long, data_timestamp timestamp_ntz, data_value double"
-    stream = spark.readStream.schema(sch).parquet(src + "/*")
-    out = stateful_stl_scores(stream, "series_id", "data_timestamp", "data_value")
-    res = _drain(spark, out, "stl_stream", src)
+    res = replay([[fixture]], lambda s: stateful_stl_scores(
+        s, "series_id", "data_timestamp", "data_value"
+    ))
     w = Window.partitionBy("series_id").orderBy(F.col("ts").desc())
     last = {
         r.series_id: r
@@ -198,7 +174,7 @@ def test_foreachbatch_parquet_sink(spark, stream_dir):
 
     q = (
         stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", tempfile.mkdtemp())
+        .option("checkpointLocation", os.path.join(stream_dir, "ckpt"))
         .start()
     )
     q.processAllAvailable()
@@ -209,21 +185,21 @@ def test_foreachbatch_parquet_sink(spark, stream_dir):
     assert back.count() == 6
 
 
-def test_windowed_stats_append_after_watermark(spark, stream_dir):
+def test_windowed_stats_append_after_watermark(spark):
     """Tumbling-window aggs emit closed windows once the watermark
     passes; late rows beyond the watermark don't resurrect windows."""
     base = dt.datetime(2024, 1, 1)
-    src = os.path.join(stream_dir, "src")
-    os.makedirs(src)
-    _write_batch(spark, src, [
-        (1, base + dt.timedelta(minutes=m), float(m)) for m in range(3)
-    ], 1)
-    # advance event time far past the first day so its window closes
-    _write_batch(spark, src, [(1, base + dt.timedelta(days=2), 99.0)], 2)
-    stream = spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", 1).parquet(src + "/*")
-    out = windowed_series_stats(stream, ["user_id"], "ts", "value",
-                                window="1 day", watermark="1 hour")
-    res = _drain(spark, out, "ws1", src).collect()
+    batches = [
+        spark.createDataFrame(
+            [(1, base + dt.timedelta(minutes=m), float(m)) for m in range(3)],
+            SCHEMA,
+        ),
+        # advance event time far past the first day so its window closes
+        spark.createDataFrame([(1, base + dt.timedelta(days=2), 99.0)], SCHEMA),
+    ]
+    res = replay([batches], lambda s: windowed_series_stats(
+        s, ["user_id"], "ts", "value", window="1 day", watermark="1 hour"
+    )).collect()
     assert len(res) == 1  # only the closed day-1 window is appended
     r = res[0]
     assert r.window_start == base and r.n_obs == 3
@@ -248,10 +224,8 @@ def test_checkpoint_restart_preserves_state(spark, stream_dir):
             spark.readStream.schema(SCHEMA)
             .option("maxFilesPerTrigger", 1).parquet(src + "/*")
         )
-        out = stateful_run_length(stream, "user_id", "ts", "value",
-                                  value_rep_lim=3)
         q = (
-            out.writeStream.outputMode("append").format("parquet")
+            _run_length(stream).writeStream.outputMode("append").format("parquet")
             .option("path", sink).option("checkpointLocation", ckpt).start()
         )
         q.processAllAvailable()
@@ -301,7 +275,7 @@ def test_staleness_timeout_fires_stale_then_recovers(spark, stream_dir):
     q = (
         alerts.writeStream.outputMode("update")
         .format("memory").queryName("stale_alerts")
-        .option("checkpointLocation", tempfile.mkdtemp())
+        .option("checkpointLocation", os.path.join(stream_dir, "ckpt"))
         .trigger(processingTime="500 milliseconds")
         .start()
     )
@@ -328,9 +302,10 @@ def test_staleness_timeout_fires_stale_then_recovers(spark, stream_dir):
         assert (7, "RECOVERED") in rows(), "fresh data never produced RECOVERED"
     finally:
         q.stop()
+        spark.catalog.dropTempView("stale_alerts")
 
 
-def test_streaming_session_windows(spark, stream_dir):
+def test_streaming_session_windows(spark):
     """Native session windows (session_window + watermark) in a stream:
     gaps > 30 min split sessions; closed sessions emit once the
     watermark passes; results match the batch session_window over the
@@ -338,31 +313,32 @@ def test_streaming_session_windows(spark, stream_dir):
     from pyspark.sql import functions as F
 
     base = dt.datetime(2024, 1, 1)
-    src = os.path.join(stream_dir, "src")
-    os.makedirs(src)
     rows = [
         (1, base + dt.timedelta(minutes=0), 1.0),
         (1, base + dt.timedelta(minutes=10), 2.0),   # same session
         (1, base + dt.timedelta(minutes=60), 3.0),   # gap 50m → new session
         (2, base + dt.timedelta(minutes=5), 4.0),
     ]
-    _write_batch(spark, src, rows, 1)
-    # event-time sentinel far ahead so every session closes
-    _write_batch(spark, src, [(9, base + dt.timedelta(days=3), 0.0)], 2)
+    batches = [
+        spark.createDataFrame(rows, SCHEMA),
+        # event-time sentinel far ahead so every session closes
+        spark.createDataFrame([(9, base + dt.timedelta(days=3), 0.0)], SCHEMA),
+    ]
 
-    stream = spark.readStream.schema(SCHEMA) \
-        .option("maxFilesPerTrigger", 1).parquet(src + "/*")
-    # watermarks require TIMESTAMP (not NTZ); UTC session makes the
-    # cast lossless
-    agg = (
-        stream.withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", "1 hour")
-        .groupBy(F.session_window("ts", "30 minutes").alias("sw"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("s"))
-        .select("user_id", F.col("sw.start").alias("start"), "n", "s")
-    )
+    def agg(stream):
+        # watermarks require TIMESTAMP (not NTZ); UTC session makes the
+        # cast lossless
+        return (
+            stream.withColumn("ts", F.col("ts").cast("timestamp"))
+            .withWatermark("ts", "1 hour")
+            .groupBy(F.session_window("ts", "30 minutes").alias("sw"),
+                     "user_id")
+            .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("s"))
+            .select("user_id", F.col("sw.start").alias("start"), "n", "s")
+        )
+
     got = {(r.user_id, r.start): (r.n, r.s)
-           for r in _drain(spark, agg, "sess1", src).collect()}
+           for r in replay([batches], agg).collect()}
 
     batch = (
         spark.createDataFrame(rows + [(9, base + dt.timedelta(days=3), 0.0)],
@@ -382,7 +358,7 @@ def test_streaming_session_windows(spark, stream_dir):
     assert got[(1, base + dt.timedelta(minutes=60))] == (1, 3.0)
 
 
-def test_session_histogram_gap_split_and_event_time_timeout(spark, stream_dir):
+def test_session_histogram_gap_split_and_event_time_timeout(spark):
     """Sessions close two ways: a later in-stream event revealing the
     gap (immediate emit), and the WATERMARK passing last_event + gap
     (event-time timeout emit). Both must carry the right categorical
@@ -397,38 +373,27 @@ def test_session_histogram_gap_split_and_event_time_timeout(spark, stream_dir):
         T.StructField("event_type", T.StringType()),
     ])
     base = dt.datetime(2024, 1, 1)
-    src = os.path.join(stream_dir, "src")
-    os.makedirs(src)
-
-    def wb(rows, n):
-        spark.createDataFrame(rows, tschema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(src, f"b{n}"))
-
-    wb([
-        (1, base + dt.timedelta(minutes=0), "view"),
-        (1, base + dt.timedelta(minutes=5), "view"),
-        (1, base + dt.timedelta(minutes=10), "click"),
-        (2, base + dt.timedelta(minutes=0), "purchase"),
-    ], 1)
-    # user 1 reappears past the 30-min gap -> session A closes in-stream
-    wb([(1, base + dt.timedelta(hours=3), "click")], 2)
-    # far-future rows push the watermark past everyone's last+gap ->
-    # event-time timeouts close user 1's session B and user 2's session
-    wb([(3, base + dt.timedelta(hours=10), "view")], 3)
-    wb([(3, base + dt.timedelta(hours=10, minutes=1), "view")], 4)
-
-    stream = spark.readStream.schema(tschema).option(
-        "maxFilesPerTrigger", 1
-    ).parquet(src + "/*")
-    out = stateful_session_histogram(
-        stream, "user_id", "ts", "event_type", gap_seconds=1800.0
-    )
+    batches = [spark.createDataFrame(rows, tschema) for rows in [
+        [
+            (1, base + dt.timedelta(minutes=0), "view"),
+            (1, base + dt.timedelta(minutes=5), "view"),
+            (1, base + dt.timedelta(minutes=10), "click"),
+            (2, base + dt.timedelta(minutes=0), "purchase"),
+        ],
+        # user 1 reappears past the 30-min gap -> session A closes in-stream
+        [(1, base + dt.timedelta(hours=3), "click")],
+        # far-future rows push the watermark past everyone's last+gap ->
+        # event-time timeouts close user 1's session B and user 2's session
+        [(3, base + dt.timedelta(hours=10), "view")],
+        [(3, base + dt.timedelta(hours=10, minutes=1), "view")],
+    ]]
     got = {
         (r.user_id, r.session_start): (
             r.session_end, r.n_events, r.n_types, r.top_type, r.top_count
         )
-        for r in _drain(spark, out, "sh1", src).collect()
+        for r in replay([batches], lambda s: stateful_session_histogram(
+            s, "user_id", "ts", "event_type", gap_seconds=1800.0
+        )).collect()
     }
     assert got[(1, base)] == (
         base + dt.timedelta(minutes=10), 3, 2, "view", 2
@@ -441,7 +406,7 @@ def test_session_histogram_gap_split_and_event_time_timeout(spark, stream_dir):
     assert not any(k[0] == 3 for k in got)
 
 
-def test_session_histogram_stream_matches_batch_mirror(spark, stream_dir):
+def test_session_histogram_stream_matches_batch_mirror(spark):
     """Full-replay parity with the driver-verifiable batch mirror
     (queries.py:session_histogram_batch): replaying the fixture events
     through the stateful streaming op — plus a far-future sentinel to
@@ -460,35 +425,26 @@ def test_session_histogram_stream_matches_batch_mirror(spark, stream_dir):
         .orderBy("ts")
     )
     rows = ev.collect()
-    src = os.path.join(stream_dir, "src")
-    os.makedirs(src)
     tschema = ev.schema
     # replay in event-time order across several micro-batches so state
     # genuinely crosses batch boundaries
     n_batches = 4
     per = (len(rows) + n_batches - 1) // n_batches
-    for b in range(n_batches):
-        spark.createDataFrame(
-            rows[b * per:(b + 1) * per], tschema
-        ).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(src, f"b{b}")
-        )
+    batches = [
+        spark.createDataFrame(rows[b * per:(b + 1) * per], tschema)
+        for b in range(n_batches)
+    ]
     flush_ts = max(r.ts for r in rows) + dt.timedelta(days=365)
-    spark.createDataFrame(
+    batches.append(spark.createDataFrame(
         [(-1, flush_ts, "flush"), (-1, flush_ts + dt.timedelta(minutes=1), "flush")],
         tschema,
-    ).coalesce(1).write.mode("overwrite").parquet(os.path.join(src, "bz"))
-
-    stream = spark.readStream.schema(tschema).option(
-        "maxFilesPerTrigger", 1
-    ).parquet(src + "/*")
-    out = stateful_session_histogram(
-        stream, "user_id", "ts", "event_type", gap_seconds=1800.0
-    )
+    ))
     got = {
         (r.user_id, r.session_start, r.session_end, r.n_events,
          r.n_types, r.top_type, r.top_count)
-        for r in _drain(spark, out, "shpar", src).collect()
+        for r in replay([batches], lambda s: stateful_session_histogram(
+            s, "user_id", "ts", "event_type", gap_seconds=1800.0
+        )).collect()
         if r.user_id != -1
     }
     want = {
@@ -499,7 +455,7 @@ def test_session_histogram_stream_matches_batch_mirror(spark, stream_dir):
     assert got == want and len(want) > 500
 
 
-def test_windowed_distinct_sketch_matches_batch(spark, stream_dir):
+def test_windowed_distinct_sketch_matches_batch(spark):
     """The HLL windowed distinct stream must produce, after replay,
     exactly the estimates the same sketch aggregation produces in
     batch (associative state merge across micro-batches), and stay
@@ -518,26 +474,19 @@ def test_windowed_distinct_sketch_matches_batch(spark, stream_dir):
         .orderBy("ts")
     )
     rows = ev.collect()
-    src = os.path.join(stream_dir, "src")
-    os.makedirs(src)
     per = (len(rows) + 3) // 4
-    for b in range(4):
-        spark.createDataFrame(rows[b * per:(b + 1) * per], ev.schema).coalesce(
-            1
-        ).write.mode("overwrite").parquet(os.path.join(src, f"b{b}"))
+    batches = [
+        spark.createDataFrame(rows[b * per:(b + 1) * per], ev.schema)
+        for b in range(4)
+    ]
     flush = max(r.ts for r in rows) + dt.timedelta(days=30)
-    spark.createDataFrame(
+    batches.append(spark.createDataFrame(
         [(flush, "flush", -1), (flush + dt.timedelta(hours=1), "flush", -1)],
         ev.schema,
-    ).coalesce(1).write.mode("overwrite").parquet(os.path.join(src, "bz"))
-
-    stream = spark.readStream.schema(ev.schema).option(
-        "maxFilesPerTrigger", 1
-    ).parquet(src + "/*")
-    out = windowed_distinct_sketch(stream)
+    ))
     got = {
         (r.window_start, r.event_type): (r.approx_distinct, r.n_events)
-        for r in _drain(spark, out, "wds", src).collect()
+        for r in replay([batches], windowed_distinct_sketch).collect()
         if r.event_type != "flush"
     }
 
@@ -566,7 +515,7 @@ def test_windowed_distinct_sketch_matches_batch(spark, stream_dir):
         assert abs(r.est - r.exact) <= max(2, 0.05 * r.exact)
 
 
-def test_stateful_heavy_hitters_mg_guarantee(spark, stream_dir):
+def test_stateful_heavy_hitters_mg_guarantee(spark):
     """After a multi-batch replay, every TRUE heavy hitter (frequency
     > N/(capacity+1)) must appear in the final per-key summary with
     counter >= true_count - N/(capacity+1) — the Misra-Gries
@@ -586,19 +535,14 @@ def test_stateful_heavy_hitters_mg_guarantee(spark, stream_dir):
             rows.append(("a", 7 if i % 3 == 0 else 1000 + (b * 100 + i) % 57))
             rows.append(("b", 9 if i % 2 == 0 else 2000 + (b * 100 + i) % 91))
     sch = "event_type string, user_id long"
-    src = os.path.join(stream_dir, "src")
-    os.makedirs(src)
     per = 200
-    for b in range(3):
-        spark.createDataFrame(rows[b * per:(b + 1) * per], sch).coalesce(
-            1
-        ).write.mode("overwrite").parquet(os.path.join(src, f"b{b}"))
-
-    stream = spark.readStream.schema(sch).option(
-        "maxFilesPerTrigger", 1
-    ).parquet(src + "/*")
-    out = stateful_heavy_hitters(stream, "event_type", "user_id", capacity=8)
-    res = _drain(spark, out, "mg1", src).collect()
+    batches = [
+        spark.createDataFrame(rows[b * per:(b + 1) * per], sch)
+        for b in range(3)
+    ]
+    res = replay([batches], lambda s: stateful_heavy_hitters(
+        s, "event_type", "user_id", capacity=8
+    )).collect()
 
     for key in ("a", "b"):
         true = Counter(v for k, v in rows if k == key)
@@ -670,31 +614,20 @@ def test_minute_rollup_stream_matches_batch_hierarchy(spark, stream_dir):
         # out of the comparison and of the batch reference)
         [(99, m(60 * 72), "flush", 0.0)],
     ]
-    for i, b in enumerate(batches):
-        df = spark.createDataFrame(b, schema)
-        df.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(stream_dir, f"b{i}")
-        )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_dir + "/*")
+    streamed_day = replay(
+        [[spark.createDataFrame(b, schema) for b in batches]],
+        minute_rollup_partials, reaggregate_minutes_to_day,
     )
-    minutes = _drain(
-        spark, minute_rollup_partials(stream), "minute_rollup", stream_dir
-    )
-    streamed_day = reaggregate_minutes_to_day(minutes)
 
     # the pure-batch reference on the identical rows
-    d = tempfile.mkdtemp()
     full = spark.createDataFrame(rows, schema).withColumn(
         "event_id", F.monotonically_increasing_id()
     ).withColumn("props", F.lit("{}"))
     pq.write_table(
         pa.Table.from_pandas(full.toPandas()),
-        os.path.join(d, "events.parquet"),
+        os.path.join(stream_dir, "events.parquet"),
     )
-    batch_day = reg.QUERIES["hierarchical_rollup_events"](spark, d)
+    batch_day = reg.QUERIES["hierarchical_rollup_events"](spark, stream_dir)
 
     got = {(str(r.day), r.event_type): (r.n_events, r.sum_value,
                                         r.n_minutes, r.n_hours)

@@ -1,10 +1,7 @@
-"""transformWithStateInPandas run-length: parity with the
-applyInPandasWithState implementation over the same replay.
+"""transformWithStateInPandas drawdown monitor vs its batch window law.
 
 The TWS runtime needs ``google.protobuf`` (its state-server protocol);
-this container doesn't ship it, so the parity test self-skips where
-the API can't execute — the implementation is exercised wherever
-protobuf exists.
+where it is not installed the test self-skips.
 """
 
 from __future__ import annotations
@@ -26,74 +23,10 @@ pytestmark = pytest.mark.skipif(
 )
 
 import datetime as dt
-import os
-import shutil
-import tempfile
 
 from pyspark.sql import types as T
 
-from anomaly_detection_spark.streaming.rules_stream import stateful_run_length
-from anomaly_detection_spark.streaming.tws import tws_run_length
-
-SCHEMA = T.StructType([
-    T.StructField("user_id", T.LongType()),
-    T.StructField("ts", T.TimestampNTZType()),
-    T.StructField("value", T.DoubleType()),
-])
-
-ROWS = [
-    # key 1: run of 3 split across batches + a late row
-    (1, dt.datetime(2024, 1, 1, 0, 0), 1.0),
-    (1, dt.datetime(2024, 1, 1, 0, 1), 5.0),
-    (1, dt.datetime(2024, 1, 1, 0, 2), 5.0),
-    (1, dt.datetime(2024, 1, 1, 0, 3), 5.0),
-    (1, dt.datetime(2024, 1, 1, 0, 1, 30), 9.9),  # late → dropped
-    (1, dt.datetime(2024, 1, 1, 0, 4), 7.0),
-    # key 2: alternating, never flags
-    (2, dt.datetime(2024, 1, 1, 0, 0), 3.0),
-    (2, dt.datetime(2024, 1, 1, 0, 1), 4.0),
-    (2, dt.datetime(2024, 1, 1, 0, 2), 3.0),
-]
-
-
-@pytest.fixture()
-def replay_dir(spark):
-    d = tempfile.mkdtemp()
-    src = os.path.join(d, "src")
-    os.makedirs(src)
-    for i, chunk in enumerate([ROWS[:3], ROWS[3:6], ROWS[6:]]):
-        spark.createDataFrame(chunk, SCHEMA).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(src, f"b{i}"))
-    yield src
-    shutil.rmtree(d, ignore_errors=True)
-
-
-def _run(spark, op, name, src):
-    stream = (
-        spark.readStream.schema(SCHEMA)
-        .option("maxFilesPerTrigger", 1).parquet(src + "/*")
-    )
-    out = op(stream, "user_id", "ts", "value", value_rep_lim=3)
-    q = (
-        out.writeStream.outputMode("append").format("memory")
-        .queryName(name).option("checkpointLocation", tempfile.mkdtemp())
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return sorted(
-        tuple(r) for r in spark.sql(f"SELECT * FROM {name}").collect()
-    )
-
-
-def test_tws_matches_apply_in_pandas_with_state(spark, replay_dir):
-    old = _run(spark, stateful_run_length, "tws_old", replay_dir)
-    new = _run(spark, tws_run_length, "tws_new", replay_dir)
-    assert new == old
-    assert len(new) == 8  # 9 rows minus the dropped late one
-    flags = [r for r in new if r[4] == 1]
-    assert len(flags) == 1 and flags[0][3] == 3  # run of 3 flagged once
+from anomaly_detection_spark.streaming.replay import replay
 
 
 def test_tws_drawdown_matches_batch_window_law(spark):
@@ -122,40 +55,22 @@ def test_tws_drawdown_matches_batch_window_law(spark):
         (2, 20, dt.datetime(2024, 1, 1, 0, 0), 700, 1),
         (2, 21, dt.datetime(2024, 1, 1, 0, 1), 700, 1),
     ]
-    d = tempfile.mkdtemp()
-    try:
-        src = os.path.join(d, "src")
-        df = spark.createDataFrame(rows, schema)
-        df.coalesce(1).write.parquet(os.path.join(src, "b0"))
-        stream = spark.readStream.schema(schema).parquet(src + "/*")
-        q = (
-            tws_drawdown(stream)
-            .writeStream.outputMode("append").format("memory")
-            .queryName("tws_dd")
-            .option("checkpointLocation", os.path.join(d, "ckpt"))
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        got = sorted(
-            tuple(r) for r in spark.sql("SELECT * FROM tws_dd").collect()
-        )
-        w = Window.partitionBy("user_id").orderBy("ts", "event_id") \
-            .rowsBetween(Window.unboundedPreceding, 0)
-        wp = Window.partitionBy("user_id").orderBy("ts", "event_id") \
-            .rowsBetween(Window.unboundedPreceding, -1)
-        wb = Window.partitionBy("user_id", "bucket").orderBy("ts", "event_id")
-        expect = sorted(tuple(r) for r in df.select(
-            "user_id", "event_id", "ts", "cents",
-            F.max("cents").over(w).alias("peak_cents"),
-            (F.max("cents").over(w) - F.col("cents")).alias("drawdown_cents"),
-            F.when(
-                F.col("cents")
-                >= F.coalesce(F.max("cents").over(wp), F.col("cents")), 1
-            ).otherwise(0).cast("int").alias("new_peak"),
-            F.row_number().over(wb).cast("long").alias("nth_in_bucket"),
-        ).collect())
-        assert got == expect
-        assert len(got) == 7
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    df = spark.createDataFrame(rows, schema)
+    got = sorted(tuple(r) for r in replay([[df]], tws_drawdown).collect())
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id") \
+        .rowsBetween(Window.unboundedPreceding, 0)
+    wp = Window.partitionBy("user_id").orderBy("ts", "event_id") \
+        .rowsBetween(Window.unboundedPreceding, -1)
+    wb = Window.partitionBy("user_id", "bucket").orderBy("ts", "event_id")
+    expect = sorted(tuple(r) for r in df.select(
+        "user_id", "event_id", "ts", "cents",
+        F.max("cents").over(w).alias("peak_cents"),
+        (F.max("cents").over(w) - F.col("cents")).alias("drawdown_cents"),
+        F.when(
+            F.col("cents")
+            >= F.coalesce(F.max("cents").over(wp), F.col("cents")), 1
+        ).otherwise(0).cast("int").alias("new_peak"),
+        F.row_number().over(wb).cast("long").alias("nth_in_bucket"),
+    ).collect())
+    assert got == expect
+    assert len(got) == 7
